@@ -348,3 +348,135 @@ def test_overlapped_replay_matches_sequential(spark, tmp_path, binlog_dir):
     for a, b in zip(seq_audits, ovl_audits):
         for k in ("batch_id", "n_events", "n_success", "n_failure", "n_winners"):
             assert a[k] == b[k], k
+
+
+_TIMING_KEYS = ("duration_s", "events_per_sec", "phase_s", "sink_write_s", "sink_commit_s")
+
+
+def _dlq_rows(pipe):
+    rows = pipe.spark.read.parquet(pipe.cfg.dlq_path).drop("batch_id").collect()
+    return sorted(repr(sorted(r.asDict().items())) for r in rows)
+
+
+def test_gate_built_once_and_evaluated_once_per_pass(spark, tmp_path, monkeypatch):
+    """The validity gate is built once per pipeline and evaluated once per
+    pass over a batch: the encrypt stage reuses the routed ``pre_error``
+    instead of re-gating, and the batch plan holds one encrypt UDF node.
+    Output equals the public ``ops.encrypt_batch`` path (which re-gates)."""
+    from ztdf_spark import ops
+
+    log = tmp_path / "applog"
+    # append-shaped: batch 0 dedups (no history), batches 1-2 run map-only
+    write_binlog(str(log), BinlogSpec(n_events=3_000, n_docs=3_000, n_files=6, seed=21))
+
+    calls = []
+    real = ops.assertions_invalid
+    monkeypatch.setattr(ops, "assertions_invalid", lambda c: calls.append(1) or real(c))
+    plans = []
+
+    class Traced(CdcPipeline):
+        def _sink_mor(self, enc, batch_id, *a, **k):
+            plans.append(enc._jdf.queryExecution().optimizedPlan().toString())
+            return super()._sink_mor(enc, batch_id, *a, **k)
+
+    fast = Traced(spark, Settings(), PipelineConfig(root=str(tmp_path / "fast"), target_file_rows=500))
+    fast_audits = fast.replay_in_batches(str(log), n_batches=3, max_in_flight=1)
+    assert len(calls) == 1
+    assert [a["dedup"] for a in fast_audits] == [True, False, False]
+    for plan, a in zip(plans, fast_audits):
+        scans = plan.count("Relation [")
+        # one gate per scan of the batch (the main pass, plus the winner-key
+        # pass when deduping); each gate holds exactly one ``forall`` (its
+        # assertion check; from_json appears twice inside it)
+        assert scans == (2 if a["dedup"] else 1)
+        assert plan.count("forall(") == scans
+        assert plan.count("ArrowEvalPython") == 1
+
+    class PublicPath(CdcPipeline):
+        def _encrypt(self, gated, cols):
+            return ops.encrypt_batch(gated.drop("pre_error"), self.settings, self.cfg.fmt)
+
+    ref = PublicPath(spark, Settings(), PipelineConfig(root=str(tmp_path / "ref"), target_file_rows=500))
+    ref_audits = ref.replay_in_batches(str(log), n_batches=3, max_in_flight=1)
+    strip = lambda a: {k: v for k, v in a.items() if k not in _TIMING_KEYS}  # noqa: E731
+    assert [strip(a) for a in fast_audits] == [strip(a) for a in ref_audits]
+    dlq = _dlq_rows(fast)
+    assert dlq and dlq == _dlq_rows(ref)
+    assert _state_fingerprint(fast) == _state_fingerprint(ref)
+    res = fast.verify_roundtrip(str(log))
+    assert res["compared"] > 0
+    assert sum(v for k, v in res.items() if k != "compared") == 0
+
+
+def test_dedup_basis_names_previous_batch(spark, tmp_path, binlog_dir):
+    """Each audit records what its dedup decision read: on a sequential
+    replay, batch b reads batch b-1's observed amplification."""
+    pipe = _pipe(spark, tmp_path / "basis")
+    audits = pipe.replay_in_batches(binlog_dir, n_batches=4, max_in_flight=1)
+    assert audits[0]["dedup_basis"]["from_batch"] is None and audits[0]["dedup"]
+    for prev, a in zip(audits, audits[1:]):
+        basis = a["dedup_basis"]
+        assert basis["from_batch"] == a["batch_id"] - 1
+        assert basis["amplification"] == prev["amplification_est"]
+        assert basis["threshold"] == pipe.cfg.dedup_min_amplification
+        assert a["dedup"] == (basis["amplification"] >= basis["threshold"])
+
+
+def test_overlapped_replay_later_failure_keeps_commit_order(spark, tmp_path, binlog_dir):
+    """Fault injection in the overlapped replay: batch 3 fails while batch
+    1 is still computing. Batches 1 and 2 must still commit in order, no
+    batch after the failure commits, and a resumed replay lands the
+    sequential replay's state. Every wait is bounded, so a regression fails
+    instead of hanging."""
+    import threading
+    import time
+
+    commits: list[int] = []
+
+    class Faulty(CdcPipeline):
+        def process_batch(self, batch, batch_id):
+            if batch_id == 1:
+                time.sleep(3)  # batch 2 reaches its commit first
+            if batch_id == 3:
+                raise RuntimeError("injected failure in batch 3")
+            return super().process_batch(batch, batch_id)
+
+    cfg = PipelineConfig(root=str(tmp_path / "ovf"), max_files_per_trigger=2, target_file_rows=500)
+    pipe = Faulty(spark, Settings(), cfg)
+    commit_staged = pipe.table.commit_staged
+
+    def recording_commit(*a, **k):
+        commits.append(k["batch_id"])
+        return commit_staged(*a, **k)
+
+    pipe.table.commit_staged = recording_commit
+    conf = "spark.ztdf.replayOverlapMaxBatchWall"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "1000")  # overlap even on a slow machine
+    outcome: dict = {}
+
+    def run():
+        try:
+            pipe.replay_in_batches(binlog_dir, n_batches=8, max_in_flight=3)
+        except BaseException as e:  # noqa: BLE001
+            outcome["error"] = e
+
+    try:
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(timeout=300)
+        assert not t.is_alive(), "overlapped replay hung after a batch failure"
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+    assert "injected failure in batch 3" in str(outcome.get("error"))
+    assert commits == [0, 1, 2]
+
+    resumed = _pipe(spark, tmp_path / "ovf")
+    resumed.replay_in_batches(binlog_dir, n_batches=8, max_in_flight=1)
+    seq = _pipe(spark, tmp_path / "ovseq")
+    seq.replay_in_batches(binlog_dir, n_batches=8, max_in_flight=1)
+    assert _state_fingerprint(resumed) == _state_fingerprint(seq)
+    assert resumed.table.current_version() == seq.table.current_version()

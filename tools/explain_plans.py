@@ -143,14 +143,16 @@ def main():
         ],
     )
 
-    # point lookup: winner reconstruction only over metadata-matched files,
-    # keys probed via a broadcast semi-join
+    # point lookup: winner reconstruction only over metadata-matched files
+    # (pruned driver-side), the requested keys filtering the scan below the
+    # winner aggregate — no key-probe join
     plk = em.q_cdc_point_lookup(spark, sf)
     dump(
         "cdc_point_lookup",
         plk,
         [
-            ("requested keys probe as broadcast semi-join", r"BroadcastHashJoin LeftSemi", True),
+            ("requested keys pushed into the parquet scan", r"PushedFilters: \[In\(doc_id", True),
+            ("no key-probe semi-join", r"LeftSemi", False),
             ("no cartesian", r"CartesianProduct", False),
         ],
     )

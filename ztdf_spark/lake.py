@@ -68,6 +68,7 @@ rewrite of current state).
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import re
@@ -238,6 +239,15 @@ def _entries_stats(entries: list[dict]) -> dict:
         "min_key": lo if bounded else None,
         "max_key": hi if bounded else None,
     }
+
+
+def _keys_touch(keys_sorted: list, lo, hi) -> bool:
+    """Does some key of the sorted list fall in [lo, hi]? A range with no
+    stats (``lo`` None) is unbounded: always touched, never pruned."""
+    if lo is None:
+        return True
+    i = bisect.bisect_left(keys_sorted, lo)
+    return i < len(keys_sorted) and keys_sorted[i] <= hi
 
 
 def columns_map(snap: dict) -> list[dict]:
@@ -941,20 +951,11 @@ class LakeTable:
             .distinct()
             .collect()
         ]
-        import bisect
-
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
         keys_sorted = sorted(k for k in keys if k is not None)
-
-        def file_touched(e: dict) -> bool:
-            if e["min_key"] is None:
-                return True  # unbounded stats -> never prunable
-            i = bisect.bisect_left(keys_sorted, e["min_key"])
-            return i < len(keys_sorted) and keys_sorted[i] <= e["max_key"]
-
-        matched_base = [f for f in base if file_touched(f)]
+        matched_base = [f for f in base if _keys_touch(keys_sorted, f["min_key"], f["max_key"])]
         matched_names = {f["path"] for f in matched_base}
         unmatched_base = [f for f in base if f["path"] not in matched_names]
         key_type = schema[key_col].dataType
@@ -1028,7 +1029,8 @@ class LakeTable:
         return out
 
     def _winners_df(
-        self, snap: dict, files: list[dict] | None = None, *, keep_cseq: bool = False
+        self, snap: dict, files: list[dict] | None = None, *, keep_cseq: bool = False,
+        keys: list | None = None,
     ) -> DataFrame:
         """Latest-wins rows per key INCLUDING delete-tombstone winners
         (``_tombstone`` column retained). Tombstones must survive until the
@@ -1039,7 +1041,10 @@ class LakeTable:
         ``files``: optional snapshot-file subset — winners are only valid
         for keys ALL of whose rows live in the subset (callers pass a
         key-range-matched superset from ``_matched_files``, e.g. the
-        ``changes()`` incremental fast path)."""
+        ``changes()`` incremental fast path).
+
+        ``keys``: keep only rows of these keys, filtered at the scan —
+        below the winner aggregate, which then sees only their rows."""
         schema = T.StructType.fromJson(snap["schema"])
         if files is None:
             files = self._files(snap)
@@ -1047,9 +1052,15 @@ class LakeTable:
         read_schema = T.StructType(list(schema.fields) + [T.StructField(_TOMBSTONE, T.BooleanType())])
         if not files:
             return self.spark.createDataFrame([], read_schema)
+
+        def scan(schema_: T.StructType) -> DataFrame:
+            df = self.spark.read.schema(schema_).parquet(
+                *[os.path.join(self._data_dir, f["path"]) for f in files]
+            )
+            return df if keys is None else df.filter(F.col(key_col).isin(list(keys)))
+
         if not any(f.get("delta") for f in files):
-            paths = [os.path.join(self._data_dir, f["path"]) for f in files]
-            return self.spark.read.schema(read_schema).parquet(*paths)
+            return scan(read_schema)
         # _cseq: the commit sequence breaking cross-commit seq ties. Normal
         # delta files encode it in the file NAME; minor-compacted files
         # (compact_deltas) PRESERVE each surviving row's original commit
@@ -1058,9 +1069,7 @@ class LakeTable:
         read_schema = T.StructType(
             list(read_schema.fields) + [T.StructField("_cseq", T.LongType())]
         )
-        paths = [os.path.join(self._data_dir, f["path"]) for f in files]
-        base = self.spark.read.schema(read_schema).parquet(*paths)
-        raw = base.withColumn(
+        raw = scan(read_schema).withColumn(
             "_cseq",
             F.coalesce(
                 F.col("_cseq"),
@@ -1078,11 +1087,13 @@ class LakeTable:
         )
         from .ops import broadcast_key_limit
 
-        # broadcast decision: scanned rows is an UPPER BOUND on distinct
-        # keys (the broadcast side is one row per key) — above the limit
-        # the join degrades to shuffled-hash. See broadcast_key_limit for
-        # the per-executor heap sizing this implies.
+        # broadcast decision: scanned rows (or the wanted keys) is an UPPER
+        # BOUND on distinct keys (the broadcast side is one row per key) —
+        # above the limit the join degrades to shuffled-hash. See
+        # broadcast_key_limit for the per-executor heap sizing this implies.
         est_rows = sum(f["rows"] for f in files)
+        if keys is not None:
+            est_rows = min(est_rows, len(keys))
         if est_rows <= broadcast_key_limit(self.spark):
             winners = F.broadcast(winners)
         else:
@@ -1106,20 +1117,25 @@ class LakeTable:
         (the join must see every row of a key to pick its winner), so a
         filter on read() still reconstructs the full table first. This
         path instead prunes at the metadata layer — manifest-list key
-        ranges, then per-file ranges (``_matched_files``) — and
-        reconstructs winners only over the surviving files, exactly the
-        pruning a 100 TB point-lookup needs. Correct because a file
-        containing any row of key k always covers k in its [min,max]
-        range, so the matched subset holds ALL of k's rows.
+        ranges, then per-file ranges, each a driver-side bisect into the
+        sorted keys (no Spark job) — and reconstructs winners only over
+        the surviving files, with ``key IN keys`` filtering their scan
+        below the winner aggregate: exactly the pruning a 100 TB
+        point-lookup needs. Correct because a file containing any row of
+        key k always covers k in its [min,max] range, so the matched
+        subset holds ALL of k's rows, and the winner of k is chosen among
+        k's rows alone.
         """
         snap = self.snapshot(version)
-        schema = T.StructType.fromJson(snap["schema"])
-        key_col = snap["key_col"]
-        key_type = schema[key_col].dataType
-        wanted = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField(key_col, key_type)])
-        )
-        files = self._matched_files(snap, wanted, key_col)
+        keys_sorted = sorted(k for k in keys if k is not None)
+        if "files" in snap:  # v2
+            cand = snap["files"]
+        else:
+            cand = []
+            for m in snap["manifests"]:
+                if _keys_touch(keys_sorted, m["min_key"], m["max_key"]):
+                    cand.extend(self._read_manifest(m["path"]))
+        files = [f for f in cand if _keys_touch(keys_sorted, f["min_key"], f["max_key"])]
         if snap.get("bloom_delta_keys"):
             # second pruning level for unclustered delta files: drop any
             # file whose key bloom admits none of the wanted keys (no false
@@ -1128,12 +1144,10 @@ class LakeTable:
             from . import bloom as _bloom
 
             files = _bloom.probe_entries(files, keys)
-        live = self._winners_df(snap, files).filter(
+        live = self._winners_df(snap, files, keys=keys_sorted).filter(
             ~F.coalesce(F.col(_TOMBSTONE), F.lit(False))
         )
-        return self._project_logical(
-            live.join(F.broadcast(wanted), key_col, "left_semi"), snap
-        )
+        return self._project_logical(live, snap)
 
     def read_range(self, lo, hi, version: int | None = None) -> DataFrame:
         """Key-RANGE scan: latest-wins rows with ``lo <= key <= hi``

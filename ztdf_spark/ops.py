@@ -131,8 +131,11 @@ def assertions_invalid(col: Column) -> Column:
     )
 
 
-def with_pre_route(df: DataFrame, settings: Settings, fmt: str = "ztdf") -> DataFrame:
-    """Catalyst-only validity gate → nullable ``pre_error`` column.
+def pre_route_column(
+    settings: Settings, fmt: str = "ztdf", *, has_op: bool = True,
+    has_assertions: bool = True, has_n_tok: bool = True,
+) -> Column:
+    """The validity gate as one nullable error-string Column (null = valid).
 
     Evaluation order matches the reference: KAS resolution first
     (AbstractToProcessor.java:56-70 raised before the attribute check at
@@ -142,17 +145,48 @@ def with_pre_route(df: DataFrame, settings: Settings, fmt: str = "ztdf") -> Data
     oversize check wins over the other two for nano.
 
     Delete events (op='D') carry no payload and bypass the gate.
-    """
-    is_change = F.col("op").isin("I", "U") if "op" in df.columns else F.lit(True)
+
+    The Column references input columns by name only, so one build serves
+    every frame with the same ``has_*`` shape: building it costs ~0.1 s of
+    Py4J lambda construction (``transform``/``filter``/``forall``), which a
+    micro-batch loop should pay once, not per batch."""
+    is_change = F.col("op").isin("I", "U") if has_op else F.lit(True)
     checks = F.when(F.size(resolved_kas(settings)) == 0, F.lit(ERR_NO_KAS)).when(
         F.size(resolved_attrs()) == 0, F.lit(ERR_NO_ATTRS)
     )
-    if "assertions" in df.columns and fmt == "ztdf":
+    if has_assertions and fmt == "ztdf":
         checks = checks.when(assertions_invalid(F.col("assertions")), F.lit(ERR_BAD_ASSERTION))
     if fmt == "nano":
-        nbytes = payload_nbytes(has_n_tok="n_tok" in df.columns)
+        nbytes = payload_nbytes(has_n_tok=has_n_tok)
         checks = F.when(nbytes > NANO_MAX_SIZE, F.lit(ERR_OVERSIZE)).otherwise(checks)
-    return df.withColumn("pre_error", F.when(is_change, checks))
+    return F.when(is_change, checks)
+
+
+def with_pre_route(df: DataFrame, settings: Settings, fmt: str = "ztdf") -> DataFrame:
+    """Catalyst-only validity gate → nullable ``pre_error`` column
+    (``pre_route_column`` over ``df``'s shape)."""
+    cols = df.columns
+    gate = pre_route_column(
+        settings, fmt, has_op="op" in cols, has_assertions="assertions" in cols,
+        has_n_tok="n_tok" in cols,
+    )
+    return df.withColumn("pre_error", gate)
+
+
+def with_encrypt_defaults(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+    """Add the optional binlog columns the encrypt stage reads, as nulls
+    (``op`` as an update, ``n_tok`` from ``tokens``), in ONE projection;
+    ``df`` unchanged when nothing is missing."""
+    have = set(df.columns if columns is None else columns)
+    defaults = {
+        "op": lambda: F.lit("U"),
+        "kas_url": lambda: F.lit(None).cast("string"),
+        "tdf_attribute": lambda: F.lit(None).cast("string"),
+        "assertions": lambda: F.lit(None).cast("string"),
+        "n_tok": lambda: F.size("tokens"),
+    }
+    missing = {c: make() for c, make in defaults.items() if c not in have}
+    return df.withColumns(missing) if missing else df
 
 
 def _encrypt_pandas(
@@ -263,19 +297,18 @@ def encrypt_batch(df: DataFrame, settings: Settings, fmt: str = "ztdf") -> DataF
     ConvertToZTDF.java:228). Original columns (incl. ``tokens``) are
     preserved so failure routes keep the original content.
     """
+    exprs = _encrypt_exprs(settings, fmt)
+    gated = with_pre_route(with_encrypt_defaults(df), settings, fmt)
+    return _encrypt_gated(gated, *exprs).drop("_enc", "pre_error")
+
+
+def _encrypt_exprs(settings: Settings, fmt: str) -> tuple[Column, dict[str, Column]]:
+    """The encrypt stage as Columns: the UDF call ``_enc`` over a gated
+    frame's columns (every column the UDF reads plus ``pre_error``) and
+    the output Columns derived from it. They reference columns by name
+    only, so a micro-batch loop builds them once and reuses them."""
     if fmt not in ("ztdf", "nano"):
         raise ValueError(f"fmt must be ztdf|nano, got {fmt}")
-    for col, default in (
-        ("op", F.lit("U")),
-        ("kas_url", F.lit(None).cast("string")),
-        ("tdf_attribute", F.lit(None).cast("string")),
-        ("assertions", F.lit(None).cast("string")),
-        ("n_tok", F.size("tokens")),
-    ):
-        if col not in df.columns:
-            df = df.withColumn(col, default)
-
-    gated = with_pre_route(df, settings, fmt)
     # SIGN_ASSERTIONS: the reference's EL-capable property
     # (AbstractTDFProcessor.java:123-129) — a template evaluates per row in
     # Catalyst; a plain bool is a constant column. The flag rides into the
@@ -293,38 +326,37 @@ def encrypt_batch(df: DataFrame, settings: Settings, fmt: str = "ztdf") -> DataF
     # (verified via .explain: two stacked ArrowEvalPython nodes). Marking it
     # nondeterministic pins a single evaluation whose result is shared.
     udf = _encrypt_pandas(settings, fmt).asNondeterministic()
-    res = gated.withColumn(
-        "_enc",
-        udf(
-            F.col("doc_id").cast("string"),
-            F.col("lsn").cast("long"),
-            F.col("op"),
-            F.col("tokens"),
-            F.col("kas_url"),
-            F.col("tdf_attribute"),
-            F.col("assertions"),
-            F.col("pre_error"),
-            sign_col,
-        ),
+    enc = udf(
+        F.col("doc_id").cast("string"),
+        F.col("lsn").cast("long"),
+        F.col("op"),
+        F.col("tokens"),
+        F.col("kas_url"),
+        F.col("tdf_attribute"),
+        F.col("assertions"),
+        F.col("pre_error"),
+        sign_col,
     )
     mime = ZTDF_MIME if fmt == "ztdf" else NANO_MIME
-    return (
-        res.withColumn("ciphertext", F.col("_enc.ciphertext"))
-        .withColumn("error", F.col("_enc.error"))
-        .withColumn(
-            "route",
-            F.when(F.col("error") == ERR_OVERSIZE, F.lit(ROUTE_OVERSIZE))
-            .when(F.col("error").isNotNull(), F.lit(ROUTE_FAILURE))
-            .otherwise(F.lit(ROUTE_SUCCESS)),
-        )
-        .withColumn(
-            "mime_type",
-            F.when(
-                (F.col("route") == ROUTE_SUCCESS) & F.col("ciphertext").isNotNull(), F.lit(mime)
-            ),
-        )
-        .drop("_enc", "pre_error")
-    )
+    ct, err = F.col("_enc.ciphertext"), F.col("_enc.error")
+    outputs = {
+        "ciphertext": ct,
+        "error": err,
+        "route": F.when(err == ERR_OVERSIZE, F.lit(ROUTE_OVERSIZE))
+        .when(err.isNotNull(), F.lit(ROUTE_FAILURE))
+        .otherwise(F.lit(ROUTE_SUCCESS)),
+        # route success ⇔ error is null
+        "mime_type": F.when(err.isNull() & ct.isNotNull(), F.lit(mime)),
+    }
+    return enc, outputs
+
+
+def _encrypt_gated(gated: DataFrame, enc: Column, outputs: dict[str, Column]) -> DataFrame:
+    """Apply ``_encrypt_exprs``: one UDF projection (``_enc``), then ONE
+    projection adding the outputs (an input column of the same name is
+    replaced in place). ``_enc`` and ``pre_error`` stay on the result for
+    the caller to drop or project away."""
+    return gated.withColumn("_enc", enc).withColumns(outputs)
 
 
 def _decrypt_pandas(settings: Settings, fmt: str):

@@ -23,13 +23,14 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -299,6 +300,20 @@ def _write_staging_with_lineage(out: DataFrame, staging: str) -> list[dict]:
     ]
 
 
+def _raise_if_failed_before(order: dict, batch_id: int) -> None:
+    """Abort ``batch_id`` of an overlapped replay if an earlier batch failed
+    (caller holds ``order["cv"]``)."""
+    failed = order["failed"]
+    if failed is not None and failed < batch_id:
+        raise RuntimeError(f"batch {failed} failed; aborting commit of batch {batch_id}")
+
+
+def _project(df: DataFrame, names: list[str], overrides: dict[str, Column]) -> DataFrame:
+    """ONE projection to ``names``, each taken from ``df`` unless
+    ``overrides`` gives its expression."""
+    return df.select(*[overrides[n].alias(n) if n in overrides else n for n in names])
+
+
 def warm_python_workers(spark: SparkSession, rounds: int = 3) -> None:
     """Populate the Python-worker pool before steady-state work.
 
@@ -372,19 +387,89 @@ def warm_python_workers(spark: SparkSession, rounds: int = 3) -> None:
         _shutil.rmtree(root, ignore_errors=True)
 
 
+class _BatchExprs:
+    """The Columns every batch plan of one pipeline reuses, built once.
+
+    Each Column-function call is a Py4J round trip plus PySpark's call-site
+    capture, ~1-3 ms apiece, and the validity gate's ``transform`` /
+    ``filter`` / ``forall`` lambdas cost ~0.1 s per build: rebuilt per
+    batch, they were most of the driver time a batch spent planning before
+    any task ran (docs/SCALE.md). The Columns reference input columns by
+    name only, so one build serves every batch (and concurrent batches)."""
+
+    def __init__(self, settings: Settings, fmt: str):
+        self._settings, self._fmt = settings, fmt
+        # the gate per batch shape (has op / assertions / n_tok)
+        self._gates: dict[tuple[bool, bool, bool], Column] = {}
+        self._lock = threading.Lock()
+        pre = F.col("pre_error")
+        self.valid = pre.isNull()  # ⇔ route success
+        is_oversize = pre == ops.ERR_OVERSIZE
+        self.route_metrics = [
+            F.count(F.lit(1)).alias("n_events"),
+            F.min("lsn").alias("min_lsn"),
+            F.max("lsn").alias("max_lsn"),
+            F.sum(F.when(self.valid, 1).otherwise(0)).alias("n_success"),
+            # null pre_error: the comparison is null → counted 0
+            F.sum(F.when(~is_oversize, 1).otherwise(0)).alias("n_failure"),
+            F.sum(F.when(is_oversize, 1).otherwise(0)).alias("n_oversize"),
+            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_delete"),
+            F.approx_count_distinct("doc_id").alias("n_keys_approx"),
+        ]
+        # valid events' winner keys: max(lsn) per key, marked ``_w``
+        self.winner_aggs = [F.max("lsn").alias("lsn"), F.lit(True).alias("_w")]
+        self.keep_winners = ~self.valid | F.col("_w").isNotNull()
+        self.encrypt = ops._encrypt_exprs(settings, fmt)
+        null_bool = F.lit(None).cast("boolean")
+        # pre-gate failures straight to the DLQ (COW sink)
+        self.dlq_pre = {
+            "error": pre,
+            "ciphertext": F.lit(None).cast("binary"),
+            "mime_type": F.lit(None).cast("string"),
+            "_tombstone": null_bool,
+        }
+        self.cow_slim = {"_tombstone": null_bool}
+        # MOR sink: plaintext and its attributes kept on failure rows only
+        is_fail = F.col("route") != ops.ROUTE_SUCCESS
+        self.mor_sink = {
+            "_tombstone": (~is_fail) & (F.col("op") == "D"),
+            **{c: F.when(is_fail, F.col(c)) for c in ("tokens", "kas_url", "tdf_attribute", "assertions")},
+        }
+        self.mor_sink_metrics = [
+            F.count(F.lit(1)).alias("n_out"),
+            F.sum(F.when(is_fail, 1).otherwise(0)).alias("n_fail_rows"),
+            F.sum(F.when(F.col("_tombstone"), 1).otherwise(0)).alias("n_del"),
+        ]
+
+    def gate(self, cols: list[str]) -> Column:
+        """The validity gate Column for a batch with columns ``cols``."""
+        key = ("op" in cols, "assertions" in cols, "n_tok" in cols)
+        with self._lock:
+            gate = self._gates.get(key)
+            if gate is None:
+                gate = self._gates[key] = ops.pre_route_column(
+                    self._settings, self._fmt,
+                    has_op=key[0], has_assertions=key[1], has_n_tok=key[2],
+                )
+        return gate
+
+
 class CdcPipeline:
     def __init__(self, spark: SparkSession, settings: Settings, cfg: PipelineConfig):
         self.spark = spark
         self.settings = settings
         self.cfg = cfg
         self.table = self._ensure_table()
-        # last observed update amplification (events / distinct keys) for
-        # dedup_mode='auto'; None → batch 0 dedups conservatively
-        self._last_amp: float | None = None
-        # last observed approx distinct-key count: lets batches ≥ 1 pick
-        # broadcast-vs-shuffled-hash for the winner-keys join WITHOUT the
-        # separate count job (see process_batch)
-        self._last_keys: int | None = None
+        # (batch_id, update amplification = events / distinct keys, approx
+        # distinct-key count) observed by the newest batch that finished:
+        # the amplification drives dedup_mode='auto', the key count lets
+        # batches ≥ 1 pick broadcast-vs-shuffled-hash for the winner-keys
+        # join WITHOUT a separate count job (see process_batch). None →
+        # batch 0 dedups conservatively. One tuple, so a batch never reads
+        # one batch's amplification with another's key count.
+        self._history: tuple[int, float, int] | None = None
+        self._lock = threading.Lock()
+        self._exprs = _BatchExprs(settings, cfg.fmt)
         # commit-ordering handle for overlapped replay (replay_in_batches):
         # None = sequential processing, no gating
         self._order: dict | None = None
@@ -426,6 +511,11 @@ class CdcPipeline:
 
     # ------------------------------------------------------------- one batch
 
+    def _encrypt(self, gated: DataFrame, cols: list[str]) -> DataFrame:
+        """``ops.encrypt_batch`` over a frame that already carries this
+        batch's ``pre_error`` (``cols``: the batch's columns before it)."""
+        return ops._encrypt_gated(ops.with_encrypt_defaults(gated, cols), *self._exprs.encrypt)
+
     def _dlq_cols(self, extra_cols: list[str]) -> list[str]:
         """One shared DLQ/staging column set for both failure stages (pre-
         gate and in-UDF), so every parquet under the DLQ root reads with a
@@ -458,19 +548,31 @@ class CdcPipeline:
         only by a gate/SDK divergence bug, and such rows are never silently
         lost.
 
-        With a merge-on-read table the whole batch costs exactly TWO Spark
-        jobs, and the wide token arrays are decoded exactly ONCE:
-        (1) a NARROW winner-keys pass (column-pruned scan — no tokens read —
-        → hash-agg max(lsn) per key, persisted + counted), (2) one fused
-        wide pass: scan → broadcast winner-key join (wide rows stay on
+        With a merge-on-read table the wide token arrays are decoded
+        exactly ONCE, in one fused wide pass: scan → gate → (when deduping)
+        broadcast join against the batch's winner keys (wide rows stay on
         their scan partitions; no wide shuffle, no AQE-coalesced
         under-parallelism in the crypto stage) → encrypt → write partitioned
-        by route. The success partition is adopted as lake delta files by a
-        pure-metadata commit; failure partitions (pre-gate AND in-UDF) are
-        moved into the DLQ. Route counts piggyback on the same job via
-        observe. Nothing reads or rewrites existing table data — per-batch
-        cost is O(batch) regardless of table size, which is what makes
-        N→4N executor scaling hold (BENCH/BASELINE.md).
+        by route. The winner keys come from a NARROW pass (column-pruned
+        scan — no tokens read — → hash-agg max(lsn) per valid key) that
+        builds as the join's broadcast side, a small job of its own; only
+        a batch 0 whose row count cannot bound its keys (streaming or
+        non-parquet source) persists and counts it in a separate job first.
+        So a map-only batch is ONE Spark job and a deduping batch two or
+        three: perfbench's ``cdc_append`` trace (dedup on batch 0 only)
+        measures 1.25 jobs per batch. The success partition is adopted as
+        lake delta files by a pure-metadata commit; failure partitions
+        (pre-gate AND in-UDF) are moved into the DLQ. Route counts
+        piggyback on the same job via observe. Nothing reads or rewrites
+        existing table data — per-batch cost is O(batch) regardless of
+        table size, which is what makes N→4N executor scaling hold
+        (BENCH/BASELINE.md).
+
+        Before any task runs, the driver builds the batch's plan. The gate
+        and every other constant Column come prebuilt from ``_BatchExprs``
+        (once per pipeline), the gate is evaluated once per pass (the
+        encrypt stage reuses ``pre_error``), and each stage is one
+        projection: ~0.1 s of driver time per batch (docs/SCALE.md).
 
         Idempotent: every side effect is keyed by ``batch_id`` (DLQ dir
         overwrite, staging dir overwrite, merge fence, audit file
@@ -491,32 +593,24 @@ class CdcPipeline:
                 self._attr_cache[key] = attr_cols
         if attr_cols:
             batch = batch.withColumns(attr_cols)
-        extra_cols = [c for c in batch.columns if c not in _CORE_COLS]
+        cols = batch.columns
+        extra_cols = [c for c in cols if c not in _CORE_COLS]
         mor = self.table.snapshot().get("merge_mode", "cow") == "mor"
+        # history of the newest finished batch, read ONCE: the dedup
+        # decision and the join strategy below come from the same batch
+        hist = self._history
 
         # NOT persisted: each consumer re-reads the (columnar, pruned,
         # codegen'd) parquet scan — measured cheaper and far lighter on GC
-        # than materializing a deserialized 1M-row object cache
-        routed = ops.with_pre_route(batch, self.settings, self.cfg.fmt).withColumn(
-            "route",
-            F.when(F.col("pre_error") == ops.ERR_OVERSIZE, F.lit(ops.ROUTE_OVERSIZE))
-            .when(F.col("pre_error").isNotNull(), F.lit(ops.ROUTE_FAILURE))
-            .otherwise(F.lit(ops.ROUTE_SUCCESS)),
-        )
+        # than materializing a deserialized 1M-row object cache. The gate
+        # is evaluated here ONCE per pass over the batch; the encrypt stage
+        # below reuses this ``pre_error`` instead of re-gating.
+        ex = self._exprs
+        routed = batch.withColumn("pre_error", ex.gate(cols))
 
         from pyspark.sql import Observation
 
         obs = Observation(f"routes-{batch_id}-{uuid.uuid4().hex[:6]}")
-        route_metrics = [
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-            F.sum(F.when(F.col("route") == ops.ROUTE_SUCCESS, 1).otherwise(0)).alias("n_success"),
-            F.sum(F.when(F.col("route") == ops.ROUTE_FAILURE, 1).otherwise(0)).alias("n_failure"),
-            F.sum(F.when(F.col("route") == ops.ROUTE_OVERSIZE, 1).otherwise(0)).alias("n_oversize"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_delete"),
-            F.approx_count_distinct("doc_id").alias("n_keys_approx"),
-        ]
         dlq_batch_dir = os.path.join(self.cfg.dlq_path, f"batch_id={batch_id}")
         shutil.rmtree(dlq_batch_dir, ignore_errors=True)
         lineage_parts = _file_lineage(batch)
@@ -532,10 +626,15 @@ class CdcPipeline:
         if mor:
             do_dedup = self.cfg.dedup_mode == "always" or (
                 self.cfg.dedup_mode == "auto"
-                and (self._last_amp is None or self._last_amp >= self.cfg.dedup_min_amplification)
+                and (hist is None or hist[1] >= self.cfg.dedup_min_amplification)
             )
-            wk = None
-            if do_dedup and self._last_keys is None:
+            wk = winner_keys = None
+            if do_dedup:
+                # valid events' winner keys. Column-pruned scan — the route
+                # gate never references `tokens` — so the dominant-width
+                # column is not decoded.
+                winner_keys = routed.filter(ex.valid).groupBy("doc_id").agg(*ex.winner_aggs)
+            if do_dedup and hist is None:
                 # batch 0 (no key-count history yet): distinct winner keys
                 # can never exceed the batch's TOTAL row count, and the
                 # source footers were already read driver-side for lineage —
@@ -553,17 +652,9 @@ class CdcPipeline:
                 else:
                     # unbounded source (streaming/non-parquet) or a batch too
                     # big to prove broadcast-safe: job 1 (NARROW) counts the
-                    # winner keys = max(lsn) per key over valid events so the
-                    # join strategy below is chosen from a REAL count.
-                    # Column-pruned scan — the route gate never references
-                    # `tokens` — so the dominant-width column is not decoded.
-                    wk = (
-                        routed.filter(F.col("route") == ops.ROUTE_SUCCESS)
-                        .select("doc_id", "lsn")
-                        .groupBy("doc_id")
-                        .agg(F.max("lsn").alias("lsn"))
-                        .persist()
-                    )
+                    # winner keys so the join strategy below is chosen from
+                    # a REAL count
+                    wk = winner_keys.persist()
                     n_keys = wk.count()
             elif do_dedup:
                 # batches ≥ 1: the previous batch's observed
@@ -576,7 +667,7 @@ class CdcPipeline:
                 # drastic key-count jump costs one batch a slower JOIN
                 # STRATEGY, never correctness, and self-corrects next
                 # batch from that batch's own observation.
-                n_keys = self._last_keys
+                n_keys = hist[2]
             t_dlq = time.monotonic()  # narrow-pass timing (cow: dlq job)
             try:
                 # the only WIDE pass: every event is scanned once; bad rows
@@ -584,27 +675,17 @@ class CdcPipeline:
                 # into encrypt + the fused route-partitioned write. Without
                 # dedup the batch is fully map-only: zero shuffle, zero
                 # broadcast — read-time latest-wins resolves supersessions.
-                observed = routed.observe(obs, *route_metrics)
+                keep = routed.observe(obs, *ex.route_metrics)
                 if do_dedup:
-                    wk_src = wk if wk is not None else (
-                        routed.filter(F.col("route") == ops.ROUTE_SUCCESS)
-                        .select("doc_id", "lsn")
-                        .groupBy("doc_id")
-                        .agg(F.max("lsn").alias("lsn"))
-                    )
-                    wk_m = wk_src.withColumn("_w", F.lit(True))
+                    wk_m = wk if wk is not None else winner_keys
                     wk_m = (
                         F.broadcast(wk_m)
                         if n_keys <= ops.broadcast_key_limit(self.spark)
                         else wk_m.hint("shuffle_hash")
                     )
-                    marked = observed.join(wk_m, ["doc_id", "lsn"], "left")
-                    keep = marked.filter(
-                        (F.col("route") != ops.ROUTE_SUCCESS) | F.col("_w").isNotNull()
-                    ).drop("_w", "pre_error", "route")
-                else:
-                    keep = observed.drop("pre_error", "route")
-                enc = ops.encrypt_batch(keep, self.settings, self.cfg.fmt)
+                    # ``_w`` rides along until the sink's projection drops it
+                    keep = keep.join(wk_m, ["doc_id", "lsn"], "left").filter(ex.keep_winners)
+                enc = self._encrypt(keep, cols)
                 # dedup drops intra-batch losers before the sink sees them,
                 # so sink-derived lineage would undercount: that (already
                 # multi-job) regime keeps the aggregation fallback
@@ -624,24 +705,30 @@ class CdcPipeline:
             if n_events == 0:
                 return {"batch_id": batch_id, "n_events": 0, "noop": True}
             n_keys_approx = int(counts["n_keys_approx"] or 0)
-            self._last_amp = n_events / max(1, n_keys_approx)
-            self._last_keys = n_keys_approx
+            amp = n_events / max(1, n_keys_approx)
+            with self._lock:
+                if self._history is None or self._history[0] < batch_id:
+                    self._history = (batch_id, amp, n_keys_approx)
             sink_counts["dedup"] = do_dedup
-            sink_counts["amplification_est"] = round(self._last_amp, 3)
+            # what the dedup decision was made from: the batch whose
+            # observation it read (None → no history, batch 0 rule)
+            sink_counts["dedup_basis"] = {
+                "from_batch": hist[0] if hist else None,
+                "amplification": round(hist[1], 3) if hist else None,
+                "threshold": self.cfg.dedup_min_amplification
+                if self.cfg.dedup_mode == "auto" else None,
+            }
+            sink_counts["amplification_est"] = round(amp, 3)
             # rows in failure partitions = pre-gate bad + in-UDF failures
             pre_bad = int(counts["n_failure"] or 0) + int(counts["n_oversize"] or 0)
             sink_counts["n_udf_failure"] = max(0, sink_counts["n_fail_rows"] - pre_bad)
             sink_counts.pop("n_fail_rows", None)
         else:
             # COW path: pre-gate DLQ write job, then dedup → encrypt → MERGE
-            observed = routed.observe(obs, *route_metrics)
-            bad = (
-                observed.filter(F.col("route") != ops.ROUTE_SUCCESS)
-                .withColumnRenamed("pre_error", "error")
-                .withColumn("ciphertext", F.lit(None).cast("binary"))
-                .withColumn("mime_type", F.lit(None).cast("string"))
-                .withColumn("_tombstone", F.lit(None).cast("boolean"))
-                .select(*self._dlq_cols(extra_cols))
+            bad = _project(
+                routed.observe(obs, *ex.route_metrics).filter(~ex.valid),
+                self._dlq_cols(extra_cols),
+                ex.dlq_pre,
             )
             bad.write.mode("overwrite").parquet(os.path.join(dlq_batch_dir, "stage=pre"))
             counts = obs.get
@@ -650,10 +737,10 @@ class CdcPipeline:
             if n_events == 0:
                 return {"batch_id": batch_id, "n_events": 0, "noop": True}
             winners = ops.latest_wins_join(
-                routed.filter(F.col("route") == ops.ROUTE_SUCCESS).drop("pre_error", "route"),
+                routed.filter(ex.valid),
                 broadcast_keys=int(counts["n_success"] or 0) <= ops.broadcast_key_limit(self.spark),
             )
-            enc = ops.encrypt_batch(winners, self.settings, self.cfg.fmt)
+            enc = self._encrypt(winners, cols)
             mstats, sink_counts = self._sink_cow(enc, batch_id, extra_cols)
         t_sink = time.monotonic()
 
@@ -730,20 +817,20 @@ class CdcPipeline:
         Computation of independent batches overlaps freely; everything that
         mutates table metadata (merge commit, compaction) must apply in
         batch_id order for fencing and ``_cseq`` ordering to match the
-        sequential replay. No-op outside an overlapped replay. If an
-        earlier batch failed, raises instead of committing on top of a
-        hole — matching the sequential loop, which never reaches this
-        batch at all."""
+        sequential replay. No-op outside an overlapped replay.
+
+        The turn is batch_id itself: ``turn`` only moves past a batch once
+        every earlier one has exited (``replay_in_batches``), so a LATER
+        batch's failure never lets this one jump the queue. If an EARLIER
+        batch failed, raises instead of committing on top of a hole —
+        matching the sequential loop, which never reaches this batch."""
         o = self._order
         if o is None:
             return
         with o["cv"]:
-            while o["turn"] < batch_id and o["failed"] is None:
+            while o["turn"] < batch_id:
                 o["cv"].wait()
-            if o["failed"] is not None and o["failed"] < batch_id:
-                raise RuntimeError(
-                    f"batch {o['failed']} failed; aborting commit of batch {batch_id}"
-                )
+            _raise_if_failed_before(o, batch_id)
 
     def _sink_mor(
         self, enc: DataFrame, batch_id: int, extra_cols: list[str],
@@ -761,31 +848,17 @@ class CdcPipeline:
         from pyspark.sql import types as T
 
         lake_cols = ["doc_id", "lsn", "ciphertext", "mime_type", "n_tok", "source", *extra_cols]
-        is_fail = F.col("route") != ops.ROUTE_SUCCESS
         sel_cols = [*self._dlq_cols(extra_cols), "route"]
-        src = enc
+        overrides = self._exprs.mor_sink
         if collect_lineage:
             # stamp the WAL segment each row came from: the staged write's
             # OWN footers then yield the per-source-file lineage with no
             # extra job (_staged_lineage); dictionary-encoded, ~free, and
             # invisible to schema-pinned lake reads
-            src = enc.withColumn("_src_file", F.input_file_name())
+            overrides = {**overrides, "_src_file": F.input_file_name()}
             sel_cols.append("_src_file")
-        out = (
-            src.withColumn("_tombstone", (~is_fail) & (F.col("op") == "D"))
-            .withColumn("tokens", F.when(is_fail, F.col("tokens")))
-            .withColumn("kas_url", F.when(is_fail, F.col("kas_url")))
-            .withColumn("tdf_attribute", F.when(is_fail, F.col("tdf_attribute")))
-            .withColumn("assertions", F.when(is_fail, F.col("assertions")))
-            .select(*sel_cols)
-        )
         obs = Observation(f"sink-{batch_id}-{uuid.uuid4().hex[:6]}")
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_out"),
-            F.sum(F.when(F.col("route") != ops.ROUTE_SUCCESS, 1).otherwise(0)).alias("n_fail_rows"),
-            F.sum(F.when(F.col("_tombstone"), 1).otherwise(0)).alias("n_del"),
-        )
+        out = _project(enc, sel_cols, overrides).observe(obs, *self._exprs.mor_sink_metrics)
         staging = os.path.join(self.cfg.root, f"_ingest-{batch_id:010d}")
         shutil.rmtree(staging, ignore_errors=True)
         t_w0 = time.monotonic()
@@ -841,11 +914,7 @@ class CdcPipeline:
         in-UDF failures to DLQ stage=udf, then MERGE."""
         from pyspark.sql import Observation
 
-        enc_slim = (
-            enc.withColumn("_tombstone", F.lit(None).cast("boolean"))
-            .select(*self._dlq_cols(extra_cols), "route")
-            .persist()
-        )
+        enc_slim = _project(enc, [*self._dlq_cols(extra_cols), "route"], self._exprs.cow_slim).persist()
         try:
             obs = Observation(f"udfbad-{batch_id}-{uuid.uuid4().hex[:6]}")
             udf_bad = enc_slim.filter(F.col("route") != ops.ROUTE_SUCCESS).drop("route")
@@ -948,10 +1017,16 @@ class CdcPipeline:
         ordered by ``batch_id`` (``_await_commit_turn``): the next batch's
         tasks back-fill executors idled by the current batch's stage tails
         and driver-side gaps, exactly the backfill pattern for independent
-        jobs sharing one application. Final table state, fencing, audits
-        and DLQ contents are identical to the sequential replay (per-batch
+        jobs sharing one application. The state ``read()`` returns,
+        fencing, snapshot versions, DLQ contents and each audit's route
+        counts are identical to the sequential replay (per-batch
         staging/DLQ dirs are keyed by batch_id; the lake commit itself is
-        driver-side file metadata, serialized here). 2-3 in flight is
+        driver-side file metadata, serialized here). Under
+        ``dedup_mode="auto"`` the audits' dedup fields may differ: a batch
+        decides from the newest batch that had FINISHED when it started,
+        which in overlap can be older than batch_id − 1, so ``dedup``,
+        ``n_winners`` and the delta files written can differ (the audit's
+        ``dedup_basis`` names the batch read). 2-3 in flight is
         enough at any cluster size — enough to fill the tail, not so many
         that batches fight for executors; ``max_in_flight=1`` restores the
         strictly sequential loop.
@@ -993,14 +1068,18 @@ class CdcPipeline:
             for bid in range(1, len(groups)):
                 audits0.append(self.process_batch(self._read_source(*groups[bid]), bid))
             return audits0
-        import threading
         from concurrent.futures import ThreadPoolExecutor
 
-        self._order = {"turn": 1, "cv": threading.Condition(), "failed": None}
+        # turn: the lowest batch id that has not exited yet; done: exited
+        # batch ids above it; failed: the lowest batch id that raised
+        o = self._order = {"turn": 1, "done": set(), "cv": threading.Condition(), "failed": None}
 
         def one(bid: int, group: list[str]) -> dict:
-            o = self._order
             try:
+                with o["cv"]:
+                    # an earlier batch already failed: this one could never
+                    # commit, so do not compute it
+                    _raise_if_failed_before(o, bid)
                 return self.process_batch(self._read_source(*group), bid)
             except BaseException:
                 with o["cv"]:
@@ -1008,10 +1087,14 @@ class CdcPipeline:
                         o["failed"] = bid
                 raise
             finally:
-                # advance the commit turn even on failure so later batches
-                # unblock (and then abort via the `failed` marker)
+                # every way out marks the batch exited and advances the turn
+                # over the consecutive exited ids, one at a time, so a batch
+                # waits for ALL earlier batches, whichever of them failed
                 with o["cv"]:
-                    o["turn"] = max(o["turn"], bid + 1)
+                    o["done"].add(bid)
+                    while o["turn"] in o["done"]:
+                        o["done"].discard(o["turn"])
+                        o["turn"] += 1
                     o["cv"].notify_all()
 
         try:
