@@ -1,6 +1,8 @@
-"""One CDC replay run, launched via spark-submit (master from the CLI):
+"""One CDC replay run, launched via spark-submit (master from the CLI).
+Build the --py-files zip from the current tree first (it is not committed):
 
-    spark-submit --master local[N] --py-files ztdf_spark.zip \
+    python -c "import sys; sys.path.insert(0, 'bench'); from scaling import build_zip; print(build_zip())"
+    spark-submit --master local[N] --py-files bench/ztdf_spark.zip \
         bench/replay_once.py --binlog <dir> [--verify]
 
 Prints one JSON line: {"cores", "n_events", "wall_s", "events_per_sec", ...}.

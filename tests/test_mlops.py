@@ -141,3 +141,22 @@ def test_classifier_driver_and_distributed_paths_identical(spark, planted):
     finally:
         spark.conf.set("spark.ztdf.classifierDriverMaxFeatures", base)
     assert fast == slow
+
+
+def test_train_and_score_equals_train_then_score(spark, planted):
+    """train_and_score is score_classifier(train_classifier(train_frac=1))
+    row for row, on both sides of the driver-descent gate."""
+    df = spark.createDataFrame(planted, DOCS_DDL)
+    kw = dict(label_expr="text like '%alpha%'", dim=64, iters=8, lr=0.5)
+    rows = lambda out: sorted(tuple(r) for r in out.collect())  # noqa: E731
+    ref = rows(mlops.score_classifier(df, mlops.train_classifier(df, train_frac=1.0, **kw)))
+    base = spark.conf.get("spark.ztdf.classifierDriverMaxFeatures", "2000000")
+    try:
+        spark.conf.set("spark.ztdf.classifierDriverMaxFeatures", "2000000")
+        fast = rows(mlops.train_and_score(df, **kw))
+        spark.conf.set("spark.ztdf.classifierDriverMaxFeatures", "0")
+        slow = rows(mlops.train_and_score(df, **kw))
+    finally:
+        spark.conf.set("spark.ztdf.classifierDriverMaxFeatures", base)
+    assert len(ref) == len(planted)
+    assert fast == ref == slow

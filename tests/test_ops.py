@@ -293,3 +293,33 @@ def test_el_sign_assertions_template_validated():
         Settings(sign_assertions="${source:equals('web')", signing_key_pem=b"-----BEGIN X-----")
     with pytest.raises(ConfigurationError, match="signing_key_pem"):
         Settings(sign_assertions="${source:equals('web')}")
+
+
+def test_assertions_invalid_three_valued_semantics(spark):
+    """The gate's assertion check: null column → valid (false), malformed
+    JSON → invalid, any element failing a check → invalid, and an element
+    whose enum field is null (``isin`` yields null) → null, which the gate's
+    CASE treats as valid."""
+
+    def elem(**over):
+        a = {"id": "a", "type": "handling", "scope": "tdo", "appliesToState": "encrypted",
+             "statement": {"value": "v", "format": "json-structured"}}
+        a.update(over)
+        return a
+
+    cases = {
+        0: (None, False),
+        1: ("not json", True),
+        2: (json.dumps([elem()]), False),
+        3: (json.dumps([elem(scope=None)]), None),
+        4: (json.dumps([elem(appliesToState=None), elem(type=None)]), None),
+        5: (json.dumps([elem(scope="bogus")]), True),
+        6: (json.dumps([elem(statement=None)]), True),
+        7: (json.dumps([elem(scope=None), elem(type="bogus")]), True),
+        8: ("[]", False),
+        9: ("[null]", True),  # a null element has no statement
+    }
+    df = spark.createDataFrame([(i, a) for i, (a, _) in cases.items()], "i int, a string")
+    got = {r["i"]: r["bad"] for r in df.select(
+        "i", ops.assertions_invalid(F.col("a")).alias("bad")).collect()}
+    assert got == {i: want for i, (_, want) in cases.items()}

@@ -386,10 +386,11 @@ def test_gate_built_once_and_evaluated_once_per_pass(spark, tmp_path, monkeypatc
     for plan, a in zip(plans, fast_audits):
         scans = plan.count("Relation [")
         # one gate per scan of the batch (the main pass, plus the winner-key
-        # pass when deduping); each gate holds exactly one ``forall`` (its
-        # assertion check; from_json appears twice inside it)
+        # pass when deduping); each gate holds exactly one assertion check,
+        # which parses the assertion JSON once
         assert scans == (2 if a["dedup"] else 1)
-        assert plan.count("forall(") == scans
+        assert plan.count("exists(coalesce(from_json(") == scans
+        assert plan.count("from_json(") == scans
         assert plan.count("ArrowEvalPython") == 1
 
     class PublicPath(CdcPipeline):

@@ -6,6 +6,8 @@ and optionally dump .explain("formatted") plans).
 Usage:
   python tools/time_queries.py [--sf DIR] [--runs N] [--explain OUTDIR] q1 q2 ...
   python tools/time_queries.py --all            # every declared query
+  python tools/time_queries.py --conf spark.ztdf.ccDriverMaxEdges=0 dedup_clusters
+                                                # runtime session conf, repeatable
 """
 
 from __future__ import annotations
@@ -28,11 +30,17 @@ def main():
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--explain", default=None, help="dir to write <name>.txt plans")
+    ap.add_argument("--conf", action="append", default=[], metavar="KEY=VALUE",
+                    help="runtime session conf set before warm-up (repeatable), e.g. a "
+                    "driver-path gate forced to 0 to time the distributed side")
     args = ap.parse_args()
+    confs = dict(kv.split("=", 1) for kv in args.conf)
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = bench.build_spark(cores)
     spark.sparkContext.setLogLevel("ERROR")
+    for k, v in confs.items():
+        spark.conf.set(k, v)
 
     import __spark_entry__ as entrymod
 
@@ -72,7 +80,7 @@ def main():
         out[name] = {"runs": runs, "min": min(runs), "canary": canary,
                      "wall": round(time.monotonic() - t0, 1)}
         print(json.dumps({name: out[name]}), flush=True)
-    print(json.dumps({"sf": args.sf, "results": out}))
+    print(json.dumps({"sf": args.sf, "conf": confs, "results": out}))
     spark.stop()
 
 

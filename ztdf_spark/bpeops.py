@@ -43,6 +43,7 @@ textops/simops/tokops.
 
 from __future__ import annotations
 
+from contextlib import closing
 from typing import Iterator
 
 import pandas as pd
@@ -73,19 +74,32 @@ def _sampled_docs(docs: DataFrame, sample_docs: int, seed: int) -> DataFrame:
     )
 
 
-def _word_freq(docs: DataFrame) -> DataFrame:
-    """(word, freq, symbols array<string>) — the ONLY corpus-sized shuffle;
-    everything after runs on the distinct-word table."""
-    docs = spread(docs)  # single-row-group scans serialize the map work
-    words = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.length("word") > 0)
-    wf = words.groupBy("word").agg(F.count("*").alias("freq"))
-    sym = (
-        "concat(transform(sequence(1, length(word)), i -> substring(word, i, 1)),"
-        f" array('{EOW}'))"
+def _word_table(
+    docs: DataFrame, sample_docs: int, seed: int, symbols: str | None = None
+) -> tuple[DataFrame, int]:
+    """The trainers' shared prelude: (word, freq) over the layout-invariant
+    doc sample — the ONLY corpus-sized shuffle; every round after runs on
+    this distinct-word table — plus the trainer's own ``symbols``
+    projection (SQL over ``word``), lazily checkpointed. Returns the table
+    and its row count; the count is the one job that materializes it."""
+    # spread: single-row-group scans serialize the map work
+    words = (
+        spread(_sampled_docs(docs, sample_docs, seed))
+        .select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"))
+        .filter(F.length("word") > 0)
     )
-    return wf.select("word", "freq", F.expr(sym).alias("symbols"))
+    wf = words.groupBy("word").agg(F.count("*").alias("freq"))
+    if symbols is not None:
+        wf = wf.withColumn("symbols", F.expr(symbols))
+    wf = wf.localCheckpoint(eager=False)
+    return wf, wf.count()
+
+
+# BPE symbols: one per character, then the end-of-word marker
+_SYMBOLS = (
+    "concat(transform(sequence(1, length(word)), i -> substring(word, i, 1)),"
+    f" array('{EOW}'))"
+)
 
 
 def _merge_expr(left: str, right: str, token: str):
@@ -115,16 +129,14 @@ def _merge_apply(syms: list[str], left: str, right: str, token: str) -> list[str
     return out
 
 
-def _bpe_train_driver(
-    rows: list, n_merges: int
-) -> list[tuple[int, str, str, str]]:
+def _bpe_train_driver(pdf, n_merges: int) -> list[tuple[int, str, str, str]]:
     """Driver-side twin of the distributed merge loop — IDENTICAL results
     (integer pair counts under the same (count desc, pair asc) total
     order; pytest pins path equality). Used only when the measured
     distinct-word table fits ``spark.ztdf.trainDriverMaxWords``: below
     that, 2·n_merges Spark-job round trips cost orders of magnitude more
     than the arithmetic they schedule."""
-    words = [(list(r["symbols"]), int(r["freq"])) for r in rows]
+    words = [(list(syms), int(f)) for syms, f in zip(pdf["symbols"], pdf["freq"])]
     merges: list[tuple[int, str, str, str]] = []
     for rank in range(n_merges):
         cnt: dict[tuple[str, str], int] = {}
@@ -147,6 +159,64 @@ def _bpe_train_driver(
     return merges
 
 
+def _pair_counts(wf: DataFrame) -> DataFrame:
+    """(left, right, cnt): adjacent symbol pairs of the word table,
+    weighted by word frequency (partial-combine summed)."""
+    return (
+        wf.filter(F.size("symbols") >= 2)
+        .select(
+            "freq",
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(symbols) - 1), i -> "
+                    "struct(element_at(symbols, i) AS left, "
+                    "element_at(symbols, i + 1) AS right))"
+                )
+            ).alias("p"),
+        )
+        .groupBy("p.left", "p.right")
+        .agg(F.sum("freq").alias("cnt"))
+    )
+
+
+def _bpe_best_pair(wf: DataFrame) -> tuple[str, str] | None:
+    """BPE's winner under a total order (count desc, pair asc), or None
+    when no pair occurs at least twice: one aggregate job."""
+    best = _pair_counts(wf).orderBy(F.desc("cnt"), F.asc("left"), F.asc("right")).first()
+    return None if best is None or best["cnt"] < 2 else (best["left"], best["right"])
+
+
+def _merge_rounds(wf: DataFrame, best_pair, token_of) -> Iterator[tuple[str, str, str]]:
+    """The distributed merge loop BPE and WordPiece share. Per round
+    ``best_pair(wf)`` picks the pair (None ends the loop); the round yields
+    ``(left, right, token_of(left, right))`` and, when resumed, applies the
+    merge as a Catalyst fold into a LAZY checkpoint. The next round's
+    ``best_pair`` action materializes that checkpoint, so the merge adds
+    no job of its own; the previous table's blocks are released once that
+    action has materialized its child (same fusion as the
+    connected-components loop). Close the generator to stop: no checkpoint
+    block outlives it."""
+    prev = None
+    try:
+        while True:
+            got = best_pair(wf)
+            if prev is not None:
+                prev.unpersist()
+                prev = None
+            if got is None:
+                return
+            left, right = got
+            token = token_of(left, right)
+            yield left, right, token
+            prev, wf = wf, wf.withColumn(
+                "symbols", _merge_expr(left, right, token)
+            ).localCheckpoint(eager=False)
+    finally:
+        if prev is not None:
+            prev.unpersist()
+        wf.unpersist()
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 32,
@@ -156,77 +226,27 @@ def bpe_train(
     """Learn the merge list: [(rank, left, right, token), ...] with rank
     0-based in learned order. Stops early when no pair occurs at least
     twice. The merge list is driver-side state (it IS the model — a few
-    KB), exactly like simops' trained centroids/codebooks."""
-    # lazy checkpoint: the count() below is the materializing action
-    wf = _word_freq(_sampled_docs(docs, sample_docs, seed)).localCheckpoint(eager=False)
-    merges: list[tuple[int, str, str, str]] = []
-    prev = None
-    from .loopconf import small_loop_conf
+    KB), exactly like simops' trained centroids/codebooks.
 
-    n_words = wf.count()
-    # tiny-vocabulary fast path: when the measured distinct-word table is
-    # driver-sized (it is BOUNDED by the doc sample's vocabulary, never
-    # corpus size), collect it once and run the identical integer loop
-    # in-process — the distributed loop's per-round Spark jobs are pure
-    # scheduling latency at this size. Same gate philosophy as spread()/
-    # small_loop_conf: derived from a measured input property, a no-op at
-    # scale (conf: spark.ztdf.trainDriverMaxWords).
-    gate = int(docs.sparkSession.conf.get("spark.ztdf.trainDriverMaxWords", "200000"))
-    if n_words <= gate:
-        try:
-            return _bpe_train_driver(wf.collect(), n_merges)
-        finally:
-            wf.unpersist()
+    The distinct-word table is BOUNDED by the doc sample's vocabulary,
+    never corpus size: when its measured count fits
+    ``spark.ztdf.trainDriverMaxWords`` the identical integer loop runs
+    in-process (loopconf.gated_loop)."""
+    from .loopconf import gated_loop
 
-    # the merge loop iterates over the BOUNDED distinct-word table; size
-    # the per-round jobs from its measured count (see loopconf.py)
+    wf, n_words = _word_table(docs, sample_docs, seed, _SYMBOLS)
+
+    def distributed(_resize):
+        with closing(_merge_rounds(wf, _bpe_best_pair, str.__add__)) as rounds:
+            return [(rank, *m) for rank, m in zip(range(n_merges), rounds)]
+
     try:
-        with small_loop_conf(docs.sparkSession, n_words):
-            for rank in range(n_merges):
-                pairs = (
-                    wf.filter(F.size("symbols") >= 2)
-                    .select(
-                        "freq",
-                        F.explode(
-                            F.expr(
-                                "transform(sequence(1, size(symbols) - 1), i -> "
-                                "struct(element_at(symbols, i) AS left, "
-                                "element_at(symbols, i + 1) AS right))"
-                            )
-                        ).alias("p"),
-                    )
-                    .groupBy("p.left", "p.right")
-                    .agg(F.sum("freq").alias("cnt"))
-                )
-                # deterministic winner under a total order: count desc, pair asc
-                # — this action also materializes wf's pending LAZY
-                # checkpoint (the previous round's merge), making it the
-                # round's ONLY job; the previous table's blocks are
-                # released one round later, once this action has
-                # materialized its child (same fusion as the
-                # connected-components and WordPiece loops)
-                best = pairs.orderBy(
-                    F.desc("cnt"), F.asc("left"), F.asc("right")
-                ).first()
-                if prev is not None:
-                    prev.unpersist()
-                    prev = None
-                if best is None or best["cnt"] < 2:
-                    break
-                left, right = best["left"], best["right"]
-                token = left + right
-                merges.append((rank, left, right, token))
-                nxt = wf.withColumn("symbols", _merge_expr(left, right, token)).localCheckpoint(
-                    eager=False
-                )
-                prev, wf = wf, nxt
+        return gated_loop(
+            wf, n_words, "spark.ztdf.trainDriverMaxWords", 200_000,
+            lambda pdf: _bpe_train_driver(pdf, n_merges), distributed,
+        )
     finally:
-        # the merge LIST is the model (driver-side); no checkpoint block
-        # may outlive training
-        if prev is not None:
-            prev.unpersist()
         wf.unpersist()
-    return merges
 
 
 def bpe_train_merges(

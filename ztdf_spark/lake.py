@@ -928,7 +928,7 @@ class LakeTable:
         An earlier shape (anti-join + winner agg over delta+matched base)
         scanned the matched base files TWICE; with uniformly-spread delta
         keys every base range matches, making the read ~2x a plain scan
-        (measured in tools/bench_read_pruned.py). This one-pass resolve
+        (measured, BENCH/read_pruned.json). This one-pass resolve
         join is scan-bound regardless of key spread.
 
         Returns ``None`` (caller falls back to the full reconstruction)

@@ -116,12 +116,29 @@ def train_classifier(
     a clear error instead of 30 driver-OOM-sized collects.
 
     Driver-boundary shape (r7, guide §4/§6): per iteration the logits
-    come back via Arrow ``toPandas`` (columnar, no py4j row objects) and
-    the error vector ships out as an Arrow-backed local relation — at
-    ~50 k train docs the old row-pickled collect + list-of-tuples
-    ``createDataFrame`` dominated each iteration's fixed cost."""
+    come back as Arrow (``toArrow``: columnar, no py4j row objects, no
+    session flag) and the error vector ships out as an Arrow-backed local
+    relation — at ~50 k train docs the old row-pickled collect +
+    list-of-tuples ``createDataFrame`` dominated each iteration's fixed
+    cost."""
+    model, feats = _train(
+        docs, label_expr=label_expr, dim=dim, iters=iters, lr=lr, l2=l2,
+        train_frac=train_frac, max_train_rows=max_train_rows, salt=salt,
+        text_col=text_col,
+    )
+    feats.unpersist()
+    return model
+
+
+def _train(
+    docs, *, label_expr, dim, iters, lr, l2, train_frac, max_train_rows, salt, text_col
+) -> tuple[dict, DataFrame]:
+    """The prelude and fit ``train_classifier`` and ``train_and_score``
+    share: label collect, cached feature table, gated fit. Returns the
+    model and the still-cached feature table (the caller unpersists)."""
+    from .loopconf import gated_loop
+
     spark = docs.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     train = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col(text_col),
@@ -133,13 +150,15 @@ def train_classifier(
         train = train.filter(
             _hash8(F.col("doc_id"), salt + "-train") < F.lit(_rate_threshold(train_frac))
         )
-    lpdf = train.select("doc_id", "y").toPandas()  # train-sample-bounded by contract
+    # train-sample-bounded by contract
+    lpdf = train.select("doc_id", "y").toArrow().to_pandas()
     n = len(lpdf)
     if n > max_train_rows:
         raise ValueError(
             f"train set has {n} rows > max_train_rows={max_train_rows}; "
-            "per-iteration logits are collected driver-side — set train_frac "
-            "(md5-rule sample) or raise max_train_rows deliberately"
+            "per-iteration logits are collected driver-side — train on an "
+            "md5-rule sample (train_classifier(train_frac=...) + "
+            "score_classifier) or raise max_train_rows deliberately"
         )
     labels = dict(
         zip(lpdf["doc_id"].to_numpy(np.int64).tolist(), lpdf["y"].to_numpy(np.int64).tolist())
@@ -151,8 +170,7 @@ def train_classifier(
     # distribution), which removes one shuffle stage from each of the
     # ``iters`` round trips. Layout never affects results — every
     # cross-partition sum is int64-exact by construction.
-    feat_parts = max(1, min(int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-                            n // 6_000 + 1))
+    feat_parts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), n // 6_000 + 1))
     feats = (
         hashed_features(train, dim=dim, salt=salt, text_col=text_col)
         .repartition(feat_parts, "doc_id")
@@ -163,31 +181,22 @@ def train_classifier(
     # AQE); the count doubles as the exact working-set size for the loop.
     n_feat = feats.count()
     # driver-sized working sets take the in-process descent (bit-identical
-    # — see _fit_driver); larger ones size the distributed loop's jobs
-    # from the measured feature count (guide §2: derive partitioning from
-    # input size; a 100 TB-scale train sample keeps the session config
-    # untouched and the loop distributed).
-    fgate = int(spark.conf.get("spark.ztdf.classifierDriverMaxFeatures", "2000000"))
-    if n_feat <= fgate:
-        w, b = _fit_driver(
-            feats.toPandas(), labels, dim=dim, iters=iters, lr=lr, l2=l2, n=n
-        )
-    else:
-        base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        base_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        parts = max(1, min(base_parts, int(n_feat) // 250_000 + 1))
-        w, b = _fit(
-            feats, labels, dim=dim, iters=iters, lr=lr, l2=l2, n=n,
-            parts=parts, base_parts=base_parts, base_aqe=base_aqe,
-        )
-    feats.unpersist()
-    return {
+    # — see _fit_driver); a 100 TB-scale train sample keeps the loop
+    # distributed, its jobs sized from the measured feature count
+    fit = dict(dim=dim, iters=iters, lr=lr, l2=l2, n=n)
+    w, b = gated_loop(
+        feats, n_feat, "spark.ztdf.classifierDriverMaxFeatures", 2_000_000,
+        lambda fpdf: _fit_driver(fpdf, labels, **fit),
+        lambda _resize: _fit(feats, labels, **fit),
+    )
+    model = {
         "wq": np.rint(w * Q_SCALE).astype(np.int64).tolist(),
         "bq": int(np.rint(b * Q_SCALE)),
         "dim": dim,
         "salt": salt,
         "n_train": n,
     }
+    return model, feats
 
 
 def _fit_driver(fpdf, labels, *, dim, iters, lr, l2, n):
@@ -223,48 +232,42 @@ def _fit_driver(fpdf, labels, *, dim, iters, lr, l2, n):
     return w, b
 
 
-def _fit(feats, labels, *, dim, iters, lr, l2, n, parts, base_parts, base_aqe):
-    """The iteration loop over an already-cached feature table; returns
-    (w, b) float64. Extracted so train_and_score can share the cache."""
+def _fit(feats, labels, *, dim, iters, lr, l2, n):
+    """The distributed iteration loop over the cached feature table;
+    returns (w, b) float64."""
     import pyarrow as pa
 
     spark = feats.sparkSession
     w = np.zeros(dim, dtype=np.float64)
     b = 0.0
-    try:
-        if parts < base_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        for _ in range(iters):
-            wq = np.rint(w * Q_SCALE).astype(np.int64)
-            zpdf = _dot_q(feats, wq.tolist()).toPandas()
-            ids = zpdf["doc_id"].to_numpy(np.int64)
-            z = zpdf["zq"].to_numpy(np.float64) / Q_SCALE + b
-            y = np.array([labels[i] for i in ids.tolist()], dtype=np.float64)
-            # clip keeps exp() in range; the oracle clips identically
-            p = 1.0 / (1.0 + np.exp(-np.clip(z, -30.0, 30.0)))
-            eq = np.rint((p - y) * Q_SCALE).astype(np.int64)
-            edf = F.broadcast(
-                spark.createDataFrame(
-                    pa.table({"doc_id": pa.array(ids, pa.int64()), "eq": pa.array(eq, pa.int64())})
-                )
+    for _ in range(iters):
+        wq = np.rint(w * Q_SCALE).astype(np.int64)
+        zpdf = _dot_q(feats, wq.tolist()).toArrow().to_pandas()
+        ids = zpdf["doc_id"].to_numpy(np.int64)
+        z = zpdf["zq"].to_numpy(np.float64) / Q_SCALE + b
+        y = np.array([labels[i] for i in ids.tolist()], dtype=np.float64)
+        # clip keeps exp() in range; the oracle clips identically
+        p = 1.0 / (1.0 + np.exp(-np.clip(z, -30.0, 30.0)))
+        eq = np.rint((p - y) * Q_SCALE).astype(np.int64)
+        edf = F.broadcast(
+            spark.createDataFrame(
+                pa.table({"doc_id": pa.array(ids, pa.int64()), "eq": pa.array(eq, pa.int64())})
             )
-            gpdf = (
-                feats.join(edf, "doc_id")
-                .groupBy("idx")
-                .agg(F.sum(F.col("cnt") * F.col("eq")).alias("gq"))
-                .toPandas()
-            )
-            grad = np.zeros(dim, dtype=np.float64)
-            grad[gpdf["idx"].to_numpy(np.int64)] = gpdf["gq"].to_numpy(np.float64)
-            grad /= Q_SCALE * n
-            # docs with zero train-set features contribute 0 to grad but must
-            # still pull the bias (their p comes from b alone)
-            w -= lr * (grad + l2 * w)
-            b -= lr * float(np.sum(eq)) / (Q_SCALE * n)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(base_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", base_aqe)
+        )
+        gpdf = (
+            feats.join(edf, "doc_id")
+            .groupBy("idx")
+            .agg(F.sum(F.col("cnt") * F.col("eq")).alias("gq"))
+            .toArrow()
+            .to_pandas()
+        )
+        grad = np.zeros(dim, dtype=np.float64)
+        grad[gpdf["idx"].to_numpy(np.int64)] = gpdf["gq"].to_numpy(np.float64)
+        grad /= Q_SCALE * n
+        # docs with zero train-set features contribute 0 to grad but must
+        # still pull the bias (their p comes from b alone)
+        w -= lr * (grad + l2 * w)
+        b -= lr * float(np.sum(eq)) / (Q_SCALE * n)
     return w, b
 
 
@@ -288,59 +291,13 @@ def train_and_score(
     multiset. At 100 TB use train_classifier on an md5-rule sample +
     score_classifier instead; this path is for corpora whose full feature
     table is worth one cache."""
-    spark = docs.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    train = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col(text_col),
-        F.expr(label_expr).cast("int").alias("y"),
+    model, feats = _train(
+        docs, label_expr=label_expr, dim=dim, iters=iters, lr=lr, l2=l2,
+        train_frac=1.0, max_train_rows=max_train_rows, salt=salt, text_col=text_col,
     )
-    lpdf = train.select("doc_id", "y").toPandas()
-    n = len(lpdf)
-    if n > max_train_rows:
-        raise ValueError(
-            f"train set has {n} rows > max_train_rows={max_train_rows}; "
-            "use train_classifier(train_frac=...) + score_classifier"
-        )
-    labels = dict(
-        zip(lpdf["doc_id"].to_numpy(np.int64).tolist(), lpdf["y"].to_numpy(np.int64).tolist())
-    )
-    feat_parts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
-                            n // 6_000 + 1))
-    feats = (
-        hashed_features(train, dim=dim, salt=salt, text_col=text_col)
-        .repartition(feat_parts, "doc_id")
-        .cache()
-    )
-    n_feat = feats.count()
-    fgate = int(spark.conf.get("spark.ztdf.classifierDriverMaxFeatures", "2000000"))
-    if n_feat <= fgate:
-        w, b = _fit_driver(
-            feats.toPandas(), labels, dim=dim, iters=iters, lr=lr, l2=l2, n=n
-        )
-    else:
-        base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        base_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        parts = max(1, min(base_parts, int(n_feat) // 250_000 + 1))
-        w, b = _fit(
-            feats, labels, dim=dim, iters=iters, lr=lr, l2=l2, n=n,
-            parts=parts, base_parts=base_parts, base_aqe=base_aqe,
-        )
-    wq = np.rint(w * Q_SCALE).astype(np.int64)
-    bq = int(np.rint(b * Q_SCALE))
-    # scoring over the SAME cached features (left join keeps zero-feature
-    # docs, scored by bias alone); the cache stays alive inside the
-    # returned plan and is evicted LRU / on session end
-    zq = _dot_q(feats, wq.tolist())
-    base = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-    return (
-        base.join(zq, "doc_id", "left")
-        .select(
-            "doc_id",
-            (F.coalesce(F.col("zq"), F.lit(0)) + F.lit(bq)).alias("score_q"),
-        )
-        .withColumn("pred", (F.col("score_q") > 0).cast("int"))
-    )
+    # the cache stays alive inside the returned plan and is evicted LRU /
+    # on session end
+    return _score(docs, feats, model)
 
 
 def score_classifier(
@@ -354,6 +311,12 @@ def score_classifier(
     feats = hashed_features(
         docs, dim=model["dim"], salt=model["salt"], text_col=text_col
     )
+    return _score(docs, feats, model)
+
+
+def _score(docs: DataFrame, feats: DataFrame, model: dict) -> DataFrame:
+    """Score every doc of ``docs`` from its feature rows; the left join
+    keeps zero-feature docs, scored by the bias alone."""
     zq = _dot_q(feats, model["wq"])
     base = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
     return (

@@ -124,10 +124,18 @@ def assertions_invalid(col: Column) -> Column:
         & a["appliesToState"].isin(*tdf.ASSERTION_STATES)
         & a["type"].isin(*tdf.ASSERTION_TYPES)
     )
+    # malformed JSON reads as one element that fails the check (its null
+    # ``statement`` makes elem_ok false whatever the other fields hold), so
+    # the gate parses once; ``exists(!ok)`` keeps ``~forall(ok)``'s
+    # three-valued result, null when an enum field is null
+    failing = F.array(
+        F.struct(*[F.lit(None).cast(f.dataType).alias(f.name)
+                   for f in _ASSERTION_ARRAY.elementType.fields])
+    )
     # CASE WHEN short-circuits: rows without assertions (the vast majority)
     # never pay the from_json parse
     return F.when(col.isNull(), F.lit(False)).otherwise(
-        parsed.isNull() | ~F.forall(parsed, elem_ok)
+        F.exists(F.coalesce(parsed, failing), lambda a: ~elem_ok(a))
     )
 
 

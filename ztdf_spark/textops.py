@@ -742,11 +742,14 @@ def connected_components(
     diameter (a chain of borderline near-dups would serialize it). Each
     round is two hash aggregations + joins on the node id: embarrassingly
     shuffle-parallel, no driver-side graph state. Per round the edge list
-    is truncated with an eager ``localCheckpoint`` (the loop would
+    is truncated with a lazy ``localCheckpoint`` (the loop would
     otherwise stack O(rounds) of lineage onto every later job; on a real
     cluster with executor churn switch to ``checkpoint()`` on a reliable
     dir). Convergence is detected by an order-insensitive (count,
     bit_xor(xxhash64)) edge-set signature — one tiny action per round.
+    A graph whose measured edge count fits ``spark.ztdf.ccDriverMaxEdges``
+    is collected and solved by in-process union-find instead
+    (loopconf.gated_loop).
     """
     sig_agg = [
         F.count("*").alias("n"),
@@ -765,23 +768,15 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     row = e.agg(*sig_agg).collect()[0]
-    prev = (row["n"], row["x"])
-    n_edges = row["n"]
     spark = edges.sparkSession
-    # driver-sized graphs: the alternating-star rounds are pure scheduling
-    # latency when the whole edge set fits in one process, so collect it
-    # once and run union-find with min-root union — the same mathematical
-    # result (component = min node id) by construction; pytest pins path
-    # equality. Gated on the MEASURED edge count (conf:
-    # spark.ztdf.ccDriverMaxEdges); above the gate, the O(log² n)
-    # large-star/small-star loop below is the 100 TB path, unchanged.
-    gate = int(spark.conf.get("spark.ztdf.ccDriverMaxEdges", "1000000"))
-    if n_edges <= gate:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        try:
-            pdf = e.toPandas()
-        finally:
-            e.unpersist()
+
+    def union_find(pdf):
+        # driver-sized graphs: the alternating-star rounds are pure
+        # scheduling latency when the whole edge set fits in one process,
+        # so run union-find with min-root union over the collected edges —
+        # the same mathematical result (component = min node id) by
+        # construction; pytest pins path equality
+        e.unpersist()
         if stats is not None:
             stats["rounds"] = 0
             stats["driver_union_find"] = True
@@ -806,37 +801,20 @@ def connected_components(
         nodes.update(pdf["d"].tolist())
         out = [(int(nd), int(find(nd))) for nd in nodes]
         return spark.createDataFrame(out, "node long, component long")
-    base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    rounds = 0
-    prev_e = e
-    try:
+
+    def star_rounds(resize):
+        # the O(log² n) large-star/small-star loop: the 100 TB path
+        e_cur, n_edges, prev = e, row["n"], (row["n"], row["x"])
+        rounds = 0
         for _ in range(max_iter):
             if n_edges == 0:
                 break
             rounds += 1
-            # Scale-adaptive round sizing (guide §2: derive partitioning
-            # from input size, never a constant): each round's working set
-            # is the CURRENT edge list, whose exact count the previous
-            # signature job already produced for free. Small rounds run
-            # with few shuffle partitions and AQE off — profiling showed
-            # the loop's wall is dominated by per-round DRIVER latency
-            # (inter-stage idle: AQE re-plans every exchange of every tiny
-            # round as its own query stage), not by task work. At scale
-            # (parts == base_parts) the conf is untouched and AQE keeps
-            # its skew/coalesce role.
-            parts = max(1, min(base_parts, (n_edges >> 18) + 1))
-            if parts < base_parts:
-                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", str(base_parts))
-                spark.conf.set("spark.sql.adaptive.enabled", base_aqe)
             # large-star: every node u emits (v, min(Γ+(u))) for its LARGER
             # neighbors v — after this every edge points large → small
-            sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
+            sym = e_cur.union(e_cur.select(F.col("d").alias("s"), F.col("s").alias("d")))
             mins = sym.groupBy("s").agg(F.least(F.min("d"), F.first("s")).alias("m"))
-            e = (
+            nxt = (
                 sym.join(mins, "s")
                 .filter(F.col("d") > F.col("s"))
                 .select(F.col("d").alias("s"), F.col("m").alias("d"))
@@ -844,9 +822,9 @@ def connected_components(
             )
             # small-star: u (all its neighbors now smaller) rewires itself
             # and every non-min neighbor to min(N(u) ∪ {u})
-            mn = e.groupBy("s").agg(F.min("d").alias("m"))
-            e = (
-                e.join(mn, "s")
+            mn = nxt.groupBy("s").agg(F.min("d").alias("m"))
+            nxt = (
+                nxt.join(mn, "s")
                 .filter(F.col("d") != F.col("m"))
                 .select(F.col("d").alias("s"), F.col("m").alias("d"))
                 .union(mn.select("s", F.col("m").alias("d")))
@@ -857,28 +835,36 @@ def connected_components(
                 # paid a second full job per round just to checkpoint)
                 .localCheckpoint(eager=False)
             )
-            row = e.agg(*sig_agg).collect()[0]
-            if prev_e is not None:
-                # the new checkpoint is materialized and self-contained:
-                # release the previous round's blocks, or O(rounds)
-                # edge-list copies pile up in executor memory (the FINAL
-                # round's blocks stay — the returned labels read them)
-                prev_e.unpersist()
-            prev_e = e
-            sig = (row["n"], row["x"])
-            n_edges = row["n"]
+            r = nxt.agg(*sig_agg).collect()[0]
+            # the new checkpoint is materialized and self-contained:
+            # release the previous round's blocks, or O(rounds) edge-list
+            # copies pile up in executor memory (the FINAL round's blocks
+            # stay — the returned labels read them)
+            e_cur.unpersist()
+            e_cur = nxt
+            sig = (r["n"], r["x"])
+            n_edges = r["n"]
             if sig == prev or sig[0] == 0:
                 break
             prev = sig
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(base_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", base_aqe)
-    if stats is not None:
-        stats["rounds"] = rounds  # convergence evidence for BENCH/cc_scale.json
-    # converged: edges form stars (non-root → component min)
-    labels = e.select(F.col("s").alias("node"), F.col("d").alias("component"))
-    roots = e.select(F.col("d").alias("node")).distinct().withColumn("component", F.col("node"))
-    return labels.union(roots)
+            # each round's working set is the CURRENT edge list, whose
+            # exact count this signature job produced for free: size the
+            # next round from it (few partitions and AQE off while small)
+            resize(n_edges)
+        if stats is not None:
+            stats["rounds"] = rounds  # convergence evidence for BENCH/cc_scale.json
+        # converged: edges form stars (non-root → component min)
+        labels = e_cur.select(F.col("s").alias("node"), F.col("d").alias("component"))
+        roots = (
+            e_cur.select(F.col("d").alias("node")).distinct().withColumn("component", F.col("node"))
+        )
+        return labels.union(roots)
+
+    from .loopconf import gated_loop
+
+    # gated on the MEASURED edge count (conf: spark.ztdf.ccDriverMaxEdges)
+    return gated_loop(e, row["n"], "spark.ztdf.ccDriverMaxEdges", 1_000_000,
+                      union_find, star_rounds)
 
 
 def dedup_clusters(

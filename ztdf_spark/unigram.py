@@ -47,8 +47,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spread import spread
-
 UNK = "<unk>"
 
 
@@ -119,17 +117,6 @@ def _segment_or_unk(word: str, counts: dict, total: int, max_len: int):
     if run:
         out.extend(_viterbi(run, counts, total, max_len))
     return out
-
-
-def _word_freq(docs: DataFrame) -> DataFrame:
-    """(word, freq) — the only corpus-sized shuffle."""
-    docs = spread(docs)  # single-row-group scans serialize the map work
-    return (
-        docs.select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
-    )
 
 
 def _seed_vocab(
@@ -208,13 +195,9 @@ def _estep_local(words: list, counts: dict, max_len: int) -> dict:
     return agg
 
 
-def _unigram_train_driver(
-    words: list, vocab_size: int, *, seed_size: int, max_piece_len: int,
-    shrink_num: int, shrink_den: int, max_rounds: int,
-) -> list[tuple[str, int]]:
-    """Driver-side twin of the distributed hard-EM loop — IDENTICAL
-    results (same seed total order, same Viterbi, same integer usage
-    sums; pytest pins path equality)."""
+def _seed_local(words: list, seed_size: int, max_piece_len: int) -> dict:
+    """In-process twin of ``_seed_vocab``: same substrings, same integer
+    sums, same (count desc, piece asc) top-N."""
     subs: dict = {}
     for word, freq in words:
         n = len(word)
@@ -227,25 +210,35 @@ def _unigram_train_driver(
         ((p, c) for p, c in subs.items() if len(p) > 1),
         key=lambda pc: (-pc[1], pc[0]),
     )[:seed_size]
-    vocab = dict(chars + multi)
+    return dict(chars + multi)
+
+
+def _hard_em(
+    vocab: dict, estep, vocab_size: int, shrink_num: int, shrink_den: int, max_rounds: int
+) -> list[tuple[str, int]]:
+    """The pruning loop both paths run, from the seed ``vocab``;
+    ``estep(vocab)`` returns the piece usage under ``vocab`` (in-process
+    or distributed — identical integer sums)."""
     for _ in range(max_rounds):
-        used = _estep_local(words, vocab, max_piece_len)
-        cs = {p: c for p, c in vocab.items() if len(p) == 1}
-        n_multi = max(0, len(vocab) - len(cs))
+        used = estep(vocab)
+        chars = {p: c for p, c in vocab.items() if len(p) == 1}
+        n_multi = max(0, len(vocab) - len(chars))
         target_multi = max(
-            max(0, vocab_size - len(cs)), n_multi * shrink_num // shrink_den
+            max(0, vocab_size - len(chars)), n_multi * shrink_num // shrink_den
         )
-        keep = {p: used.get(p, 1) for p in cs}
-        mult = sorted(
+        # chars keep their E-step usage when used, else count 1 (never
+        # dropped — coverage); multi-char pieces with zero usage drop
+        keep = {p: used.get(p, 1) for p in chars}
+        multi = sorted(
             ((p, c) for p, c in used.items() if len(p) > 1 and p in vocab),
             key=lambda pc: (-pc[1], pc[0]),
         )[:target_multi]
-        keep.update(dict(mult))
-        done = len(keep) <= max(vocab_size, len(cs)) and n_multi == len(mult)
+        keep.update(dict(multi))
+        done = len(keep) <= max(vocab_size, len(chars)) and n_multi == len(multi)
         vocab = keep
         if done:
             break
-    final = _estep_local(words, vocab, max_piece_len)
+    final = estep(vocab)
     out = {p: final.get(p, 1) if len(p) == 1 else final.get(p, 0) for p in vocab}
     out = {p: c for p, c in out.items() if c > 0 or len(p) == 1}
     return sorted(out.items(), key=lambda pc: (-pc[1], pc[0]))
@@ -269,58 +262,38 @@ def unigram_train(
     round) until ``vocab_size``, then one final E-step so the returned
     counts are the usage under the FINAL vocab. Returns
     [(piece, count), ...] sorted by (count desc, piece asc); single
-    characters are always retained (full coverage of the sample)."""
-    from .bpeops import _sampled_docs
+    characters are always retained (full coverage of the sample).
 
-    from .loopconf import small_loop_conf
+    A driver-sized distinct-word table (``spark.ztdf.unigramDriverMaxWords``)
+    runs the same loop in-process (loopconf.gated_loop). The default is
+    lower than bpe/wordpiece's: the in-process E-step is single-threaded,
+    O(words × len² × rounds), so it only pays off for genuinely small word
+    tables; above the gate the distributed mapInPandas E-step keeps the
+    cores busy."""
+    from .bpeops import _word_table
+    from .loopconf import gated_loop
 
-    wf = _word_freq(_sampled_docs(docs, sample_docs, seed)).localCheckpoint(
-        eager=True
-    )
-    n_words = wf.count()
-    # tiny-vocabulary fast path (same gate family as bpe/wordpiece, but a
-    # LOWER default: the driver twin runs the per-round Viterbi E-step
-    # single-threaded, O(words × len² × rounds), so it only pays off for
-    # genuinely small word tables; above the gate the distributed
-    # mapInPandas E-step keeps the cores busy)
-    gate = int(docs.sparkSession.conf.get("spark.ztdf.unigramDriverMaxWords", "4096"))
-    if n_words <= gate:
-        try:
-            words = [(r["word"], int(r["freq"])) for r in wf.collect()]
-        finally:
-            wf.unpersist()
-        return _unigram_train_driver(
-            words, vocab_size, seed_size=seed_size, max_piece_len=max_piece_len,
-            shrink_num=shrink_num, shrink_den=shrink_den, max_rounds=max_rounds,
+    wf, n_words = _word_table(docs, sample_docs, seed)
+    em = dict(vocab_size=vocab_size, shrink_num=shrink_num, shrink_den=shrink_den,
+              max_rounds=max_rounds)
+
+    def driver(pdf):
+        words = list(zip(pdf["word"].tolist(), pdf["freq"].tolist()))
+        return _hard_em(
+            _seed_local(words, seed_size, max_piece_len),
+            lambda v: _estep_local(words, v, max_piece_len), **em,
         )
+
+    def distributed(_resize):
+        return _hard_em(
+            dict(_seed_vocab(wf, seed_size, max_piece_len)),
+            lambda v: _estep_counts(wf, v, max_piece_len), **em,
+        )
+
     try:
-        # the EM loop iterates over the BOUNDED distinct-word table; size
-        # the per-round jobs from its measured count (loopconf.py)
-        with small_loop_conf(docs.sparkSession, n_words):
-            vocab = dict(_seed_vocab(wf, seed_size, max_piece_len))
-            for _ in range(max_rounds):
-                used = _estep_counts(wf, vocab, max_piece_len)
-                chars = {p: c for p, c in vocab.items() if len(p) == 1}
-                n_multi = max(0, len(vocab) - len(chars))
-                target_multi = max(
-                    max(0, vocab_size - len(chars)), n_multi * shrink_num // shrink_den
-                )
-                # chars keep their E-step usage when used, else count 1 (never
-                # dropped — coverage); multi-char pieces with zero usage drop
-                keep = {p: used.get(p, 1) for p in chars}
-                multi = sorted(
-                    ((p, c) for p, c in used.items() if len(p) > 1 and p in vocab),
-                    key=lambda pc: (-pc[1], pc[0]),
-                )[:target_multi]
-                keep.update(dict(multi))
-                done = len(keep) <= max(vocab_size, len(chars)) and n_multi == len(multi)
-                vocab = keep
-                if done:
-                    break
-            final = _estep_counts(wf, vocab, max_piece_len)
-            out = {p: final.get(p, 1) if len(p) == 1 else final.get(p, 0) for p in vocab}
-            out = {p: c for p, c in out.items() if c > 0 or len(p) == 1}
-            return sorted(out.items(), key=lambda pc: (-pc[1], pc[0]))
+        return gated_loop(
+            wf, n_words, "spark.ztdf.unigramDriverMaxWords", 4096, driver, distributed
+        )
     finally:
         wf.unpersist()
 

@@ -52,33 +52,24 @@ bpeops/unigram.
 
 from __future__ import annotations
 
+from contextlib import closing
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spread import spread
-
-from .bpeops import _merge_expr, _sampled_docs
+from .bpeops import _merge_rounds, _pair_counts, _word_table
 
 UNK = "[UNK]"
 CONT = "##"
 
 
-def _word_freq(docs: DataFrame) -> DataFrame:
-    """(word, freq, symbols) with BERT continuation symbols: first char
-    bare, later chars ##-prefixed. The ONLY corpus-sized shuffle."""
-    docs = spread(docs)  # single-row-group scans serialize the map work
-    words = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.length("word") > 0)
-    wf = words.groupBy("word").agg(F.count("*").alias("freq"))
-    sym = (
-        "transform(sequence(1, length(word)), i -> "
-        f"IF(i = 1, substring(word, i, 1), concat('{CONT}', substring(word, i, 1))))"
-    )
-    return wf.select("word", "freq", F.expr(sym).alias("symbols"))
+# BERT continuation symbols: first char bare, later chars ##-prefixed
+_SYMBOLS = (
+    "transform(sequence(1, length(word)), i -> "
+    f"IF(i = 1, substring(word, i, 1), concat('{CONT}', substring(word, i, 1))))"
+)
 
 
 def _merge_token(left: str, right: str) -> str:
@@ -88,28 +79,13 @@ def _merge_token(left: str, right: str) -> str:
     return left + (right[len(CONT):] if right.startswith(CONT) else right)
 
 
-def _best_pair(wf: DataFrame) -> tuple[str, str, int] | None:
+def _best_pair(wf: DataFrame) -> tuple[str, str] | None:
     """The exact WordPiece argmax over adjacent pairs of the current
-    word-symbol table: (left, right, pair_count), or None if no pair
+    word-symbol table: (left, right), or None if no pair
     occurs at least twice. Two distributed int64 aggregates + a broadcast
     score join + the float-band prefilter; the final exact comparison is
     driver-side over the (tiny) band."""
-    pairs = (
-        wf.filter(F.size("symbols") >= 2)
-        .select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(symbols) - 1), i -> "
-                    "struct(element_at(symbols, i) AS left, "
-                    "element_at(symbols, i + 1) AS right))"
-                )
-            ).alias("p"),
-        )
-        .groupBy("p.left", "p.right")
-        .agg(F.sum("freq").alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-    )
+    pairs = _pair_counts(wf).filter(F.col("cnt") >= 2)
     syms = (
         wf.select("freq", F.explode("symbols").alias("sym"))
         .groupBy("sym")
@@ -173,10 +149,10 @@ def _best_pair(wf: DataFrame) -> tuple[str, str, int] | None:
         rhs = best[0] * cand[1]
         if lhs > rhs or (lhs == rhs and (cand[2], cand[3]) < (best[2], best[3])):
             best = cand
-    return (best[2], best[3], best[0]) if best else None
+    return (best[2], best[3]) if best else None
 
 
-def _wp_train_driver(rows: list, vocab_size: int) -> list[str]:
+def _wp_train_driver(pdf, vocab_size: int) -> list[str]:
     """Driver-side twin of the distributed merge loop — IDENTICAL results
     (exact rational argmax by big-int cross-multiplication under the same
     (score desc, pair asc) total order; pytest pins path equality). Used
@@ -184,7 +160,7 @@ def _wp_train_driver(rows: list, vocab_size: int) -> list[str]:
     ``spark.ztdf.trainDriverMaxWords`` — the same gate as BPE's."""
     from .bpeops import _merge_apply
 
-    words = [(list(r["symbols"]), int(r["freq"])) for r in rows]
+    words = [(list(syms), int(f)) for syms, f in zip(pdf["symbols"], pdf["freq"])]
     alphabet = sorted({s for syms, _ in words for s in syms})
     vocab: list[str] = list(alphabet)
     have = set(vocab)
@@ -220,6 +196,24 @@ def _wp_train_driver(rows: list, vocab_size: int) -> list[str]:
     return vocab
 
 
+def _wp_train_distributed(wf: DataFrame, vocab_size: int) -> list[str]:
+    """The distributed merge loop over the checkpointed word table."""
+    alphabet = sorted(
+        r["sym"] for r in wf.select(F.explode("symbols").alias("sym")).distinct().collect()
+    )
+    vocab: list[str] = list(alphabet)
+    have = set(vocab)
+    if len(vocab) < vocab_size:
+        with closing(_merge_rounds(wf, _best_pair, _merge_token)) as rounds:
+            for _left, _right, token in rounds:
+                if token not in have:
+                    vocab.append(token)
+                    have.add(token)
+                if len(vocab) >= vocab_size:
+                    break
+    return vocab
+
+
 def wordpiece_train(
     docs: DataFrame,
     vocab_size: int = 64,
@@ -233,61 +227,23 @@ def wordpiece_train(
     occurs twice. Returns the piece list — rank = position: alphabet
     first (piece asc), merges after in learned order (a merge whose
     string already exists is applied but adds no new piece). The list IS
-    the model: driver-side state, a few KB, like BPE's merge list."""
-    from .loopconf import small_loop_conf
+    the model: driver-side state, a few KB, like BPE's merge list.
 
-    # lazy checkpoint: the count() below is the materializing action
-    wf = _word_freq(_sampled_docs(docs, sample_docs, seed)).localCheckpoint(eager=False)
-    prev = None
-    n_words = wf.count()
-    # tiny-vocabulary fast path (see bpe_train): the distinct-word table
-    # is bounded by the sample's vocabulary; when it is driver-sized,
-    # collect once and run the identical exact loop in-process instead of
-    # paying 2 Spark jobs of scheduling latency per merge round
-    gate = int(docs.sparkSession.conf.get("spark.ztdf.trainDriverMaxWords", "200000"))
-    if n_words <= gate:
-        try:
-            return _wp_train_driver(wf.collect(), vocab_size)
-        finally:
-            wf.unpersist()
+    Same gate as BPE's (``spark.ztdf.trainDriverMaxWords``): a
+    driver-sized distinct-word table runs the identical exact loop
+    in-process instead of paying 2 Spark jobs of scheduling latency per
+    merge round (loopconf.gated_loop)."""
+    from .loopconf import gated_loop
+
+    wf, n_words = _word_table(docs, sample_docs, seed, _SYMBOLS)
     try:
-        # the merge loop iterates over the BOUNDED distinct-word table;
-        # size the per-round jobs from its measured count (loopconf.py)
-        with small_loop_conf(docs.sparkSession, n_words):
-            alphabet = sorted(
-                r["sym"]
-                for r in wf.select(F.explode("symbols").alias("sym")).distinct().collect()
-            )
-            vocab: list[str] = list(alphabet)
-            have = set(vocab)
-            while len(vocab) < vocab_size:
-                # ONE job per round: this action also materializes wf's
-                # pending LAZY checkpoint (the previous round's merge), so
-                # the merge application stops being its own eager job —
-                # the same fusion the connected-components loop uses. The
-                # previous table's blocks can only be dropped AFTER the
-                # action that materialized its child, hence the one-round
-                # unpersist lag.
-                got = _best_pair(wf)
-                if prev is not None:
-                    prev.unpersist()
-                    prev = None
-                if got is None:
-                    break
-                left, right, _cnt = got
-                token = _merge_token(left, right)
-                if token not in have:
-                    vocab.append(token)
-                    have.add(token)
-                nxt = wf.withColumn(
-                    "symbols", _merge_expr(left, right, token)
-                ).localCheckpoint(eager=False)
-                prev, wf = wf, nxt
+        return gated_loop(
+            wf, n_words, "spark.ztdf.trainDriverMaxWords", 200_000,
+            lambda pdf: _wp_train_driver(pdf, vocab_size),
+            lambda _resize: _wp_train_distributed(wf, vocab_size),
+        )
     finally:
-        if prev is not None:
-            prev.unpersist()
         wf.unpersist()
-    return vocab
 
 
 def wordpiece_vocab_df(docs: DataFrame, vocab_size: int = 64, **kw) -> DataFrame:
